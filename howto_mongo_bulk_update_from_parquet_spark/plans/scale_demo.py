@@ -230,8 +230,9 @@ FROM (
 
 
 @register("q_stream_first_seen", FIRST_SEEN_ORACLE,
-          "custom stateful streaming dedup (applyInPandasWithState): "
-          "first-seen per (user, event_type)")
+          "streaming first-seen dedup per (user, event_type), JVM-only: "
+          "per-batch min(struct(ts, event_id)) anti-joined against the "
+          "keys already emitted, in foreachBatch")
 def q_stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import stream_first_seen
     return stream_first_seen(spark, sf_dir)

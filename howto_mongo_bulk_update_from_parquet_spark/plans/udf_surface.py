@@ -14,7 +14,8 @@ offers, each used where it's the right tool and oracle-checked.
   the exact-decimal kernel contract.
 - The pandas Arrow batch paths (`mapInPandas`,
   `applyInPandasWithState`) are exercised by q_simhash /
-  q_multimodal_meta / q_stream_first_seen.
+  q_multimodal_meta / q_stream_first_seen_ttl /
+  q_stream_threshold_alarm.
 """
 
 # NOTE: no `from __future__ import annotations` here — pandas_udf

@@ -1,16 +1,24 @@
-"""Custom stateful streaming operator via applyInPandasWithState:
-first-seen dedup — emit each (user_id, event_type) the first time it
-appears in the stream, suppress every later occurrence.
+"""Keyed streaming state over the events stream.
 
-This is the streaming form of the training-data-pipeline "emit only
-novel examples" pattern: state per key is one boolean (plus the
-winning row), bounded by key cardinality, and survives across
-micro-batches via the state store.
+First-seen dedup (`stream_first_seen`) emits each (user_id,
+event_type) the first time it appears in the stream and suppresses
+every later occurrence — the streaming form of the training-data-
+pipeline "emit only novel examples" pattern. It runs entirely in the
+JVM: a `foreachBatch` sink takes each micro-batch's per-key arg-min
+and anti-joins it against the keys emitted so far, so no Python worker
+sees a row and no state store is involved.
+
+The TTL variant (`first_seen_ttl_query`) and the threshold alarm
+(`stream_threshold_alarm`) need event-time eviction or a numeric
+accumulator, so they keep their `applyInPandasWithState` kernels:
+state per key is a boolean (or running sum), bounded by key
+cardinality, and survives across micro-batches via the state store.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +34,8 @@ OUTPUT_SCHEMA = T.StructType([
 
 STATE_SCHEMA = T.StructType([T.StructField("seen", T.BooleanType())])
 
+_KEYS = ("user_id", "event_type")
+
 
 def _argmin_ts_eid(pdf):
     """(min ts, min event_id among its ties) of one batch — numpy
@@ -40,40 +50,54 @@ def _argmin_ts_eid(pdf):
     return tmin, eid
 
 
-def _first_seen(key, pdfs, state: GroupState):
-    import pandas as pd
-    if state.exists and state.get[0]:
-        for _ in pdfs:   # drain; key already emitted
-            pass
-        return
-    best = None
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        cand = _argmin_ts_eid(pdf)
-        if best is None or cand < best:
-            best = cand
-    if best is None:
-        return
-    state.update((True,))
-    yield pd.DataFrame({"user_id": [key[0]], "event_type": [key[1]],
-                        "first_event_id": [best[1]], "first_ts": [best[0]]})
+def first_seen_stream(events: DataFrame) -> DataFrame:
+    """Drain an events stream (availableNow) into the first occurrence
+    of each (user_id, event_type), without Python and without a state
+    store; returns the emitted rows (OUTPUT_SCHEMA).
+
+    Per micro-batch (`foreachBatch`): group by the key and take
+    `min(struct(ts, event_id))` — the `ts`-then-`event_id` tie-break
+    of the batch ROW_NUMBER oracle — then anti-join against the keys
+    emitted so far with NULL-safe key equality (a plain `==` would
+    re-emit a NULL key every batch) and union the survivors in. The
+    emitted set is both the seen index and the result: append-only,
+    each key emitted once with the arg-min of the first batch holding
+    it, never re-emitted by a later batch (even with an earlier
+    `ts`), and a replayed epoch adds nothing. It is materialized once
+    per batch (`localCheckpoint`) so its plan stays one scan deep
+    across batches and the result outlives the stream's source files."""
+    # seeded with an empty relation the optimizer prunes (limit 0), so
+    # the first batch plans neither the anti-join nor the union
+    emitted = [events.sparkSession.createDataFrame([], OUTPUT_SCHEMA).limit(0)]
+
+    def emit_new(batch: DataFrame, _batch_id: int) -> None:
+        first = (batch.groupBy(*_KEYS)
+                 .agg(F.min(F.struct("ts", "event_id")).alias("m"))
+                 .select(*_KEYS, F.col("m.event_id").alias("first_event_id"),
+                         F.col("m.ts").alias("first_ts")))
+        seen = emitted[0]
+        new = first.join(seen, [first[k].eqNullSafe(seen[k]) for k in _KEYS],
+                         "left_anti")
+        # the union appends partitions every batch: cap them at the
+        # shuffle width, as a state store would be
+        width = int(batch.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        emitted[0] = seen.unionByName(new).coalesce(width).localCheckpoint()
+
+    (events.select(*_KEYS, "ts", "event_id").writeStream
+     .foreachBatch(emit_new).trigger(availableNow=True).start()
+     .awaitTermination())
+    return emitted[0]
 
 
 def stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First occurrence of each (user, event_type), computed by the
-    streaming engine with explicit keyed state."""
-    from .jobs import _run_to_memory, _stage_events_stream, scoped_state_partitions
+    """First occurrence of each (user, event_type) over the staged
+    events stream (see `first_seen_stream`)."""
+    from .jobs import _stage_events_stream
     events, stage = _stage_events_stream(spark, sf_dir)
-    # project before the stateful exchange: only 4 of 6 columns cross
-    # the Arrow boundary (drops `props`, the widest column — the JSON
-    # payload would otherwise dominate the python-worker transfer)
-    events = events.select("user_id", "event_type", "ts", "event_id")
-    out = (events.groupBy("user_id", "event_type")
-           .applyInPandasWithState(_first_seen, OUTPUT_SCHEMA, STATE_SCHEMA,
-                                   "append", GroupStateTimeout.NoTimeout))
-    with scoped_state_partitions(spark, _python_state_width(spark)):
-        return _run_to_memory(out, "append", stage)
+    try:
+        return first_seen_stream(events)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 def _python_state_width(spark: SparkSession) -> int | None:

@@ -252,3 +252,31 @@ def test_caller_supplied_n_max_matches_auto_sizing(spark, tmp_path):
         assert a[f]["m_bits"] == g[f]["m_bits"] == bi.auto_m_bits(n_max)
         assert a[f]["words"] == g[f]["words"]
     assert path  # silence unused-path lint in minimal runs
+
+
+def test_recreated_base_with_new_key_dtype_still_found(spark, tmp_path):
+    """The sidecar-meta memo must not outlive the sidecar it describes:
+    a table dropped and re-created at the same path, its bloom-indexed
+    key now a string instead of a long, has the same base dir name —
+    a probe cast to the stale long dtype would hash to the wrong bits
+    and prune the file that holds the key."""
+    import shutil
+    path = str(tmp_path / "rtab")
+    longs = spark.range(4000).select(F.col("id").alias("k"),
+                                     (F.col("id") % 7).alias("v"))
+    upsert_into_keyed_table(spark, longs, path=path, key="k",
+                            updated_at_col=None, range_files=4,
+                            bloom_cols=["k"])
+    out, st = scan_keyed_table(spark, path, where={"k": (777, 777)},
+                               with_stats=True)
+    assert st["bloom_cols_used"] == ["k"] and out.count() == 1
+    shutil.rmtree(path)
+    # digit strings: the stale long cast succeeds, so the miss is silent
+    strs = longs.select(F.col("k").cast("string").alias("k"), "v")
+    upsert_into_keyed_table(spark, strs, path=path, key="k",
+                            updated_at_col=None, range_files=4,
+                            bloom_cols=["k"])
+    out, st = scan_keyed_table(spark, path, where={"k": ("777", "777")},
+                               with_stats=True)
+    assert st["bloom_cols_used"] == ["k"]
+    assert [r["k"] for r in out.collect()] == ["777"]

@@ -303,6 +303,84 @@ def test_first_seen_ttl_state_eviction(spark, tmp_path):
     assert per_user[B] == [20] and per_user[C] == [30]
 
 
+class _PythonRowsListener:
+    """py4j QueryExecutionListener: counts the plans the session runs
+    while registered and sums their Python-worker input rows."""
+
+    def __init__(self):
+        self.plans = 0
+        self.python_rows = 0
+
+    def onSuccess(self, func_name, qe, duration_ns):  # noqa: N802 - Java API
+        from types import SimpleNamespace
+        from howto_mongo_bulk_update_from_parquet_spark.observability import plan_metrics
+        metrics = plan_metrics(SimpleNamespace(
+            _jdf=SimpleNamespace(queryExecution=lambda: qe)))
+        self.plans += 1
+        self.python_rows += sum(v for k, v in metrics.items()
+                                if k.endswith(".pythonNumRowsReceived"))
+
+    def onFailure(self, func_name, qe, exc):  # noqa: N802 - Java API
+        pass
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+def test_first_seen_across_batches_jvm_only(spark, tmp_path):
+    """Two micro-batches (maxFilesPerTrigger=1): a key seen in batch 1
+    keeps its batch-1 row although batch 2 holds an earlier `ts` for
+    it; a key new in batch 2 is emitted once with its arg-min (ts tie
+    broken by event_id); the NULL user_id group, present in both
+    batches, is emitted exactly once and equals the batch ROW_NUMBER
+    oracle. No plan the stream runs feeds a Python worker."""
+    from pyspark.sql.window import Window
+    from pyspark.java_gateway import ensure_callback_server_started
+    from howto_mongo_bulk_update_from_parquet_spark.streaming.stateful import (
+        first_seen_stream)
+
+    schema = "event_id long, ts timestamp, user_id long, event_type string"
+    src = f"{tmp_path}/src"
+
+    def write(rows, name):
+        (spark.createDataFrame(rows, "event_id long, ts string, user_id long, event_type string")
+         .select("event_id", F.col("ts").cast("timestamp"), "user_id", "event_type")
+         .coalesce(1).write.parquet(f"{src}/{name}"))
+
+    write([(10, "2024-01-01 12:00:00", 1, "click"),
+           (11, "2024-01-01 12:00:00", None, "view"),
+           (12, "2024-01-01 12:30:00", None, "view")], "b1")
+    write([(20, "2024-01-01 11:00:00", 1, "click"),     # earlier, too late
+           (22, "2024-01-01 13:00:00", 2, "click"),
+           (21, "2024-01-01 13:00:00", 2, "click"),     # ts tie: min event_id
+           (23, "2024-01-01 14:00:00", None, "view")], "b2")
+
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", "1").parquet(f"{src}/b*"))
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    listener = _PythonRowsListener()
+    manager = spark._jsparkSession.listenerManager()
+    manager.register(listener)
+    try:
+        got = first_seen_stream(stream).collect()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        manager.unregister(listener)
+    assert listener.plans > 0 and listener.python_rows == 0
+
+    rows = {(r.user_id, r.event_type): r.first_event_id for r in got}
+    assert len(got) == len(rows) == 3
+    assert rows[(1, "click")] == 10
+    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
+    oracle = {(r.user_id, r.event_type): r.event_id
+              for r in (spark.read.schema(schema).parquet(f"{src}/b*")
+                        .withColumn("rn", F.row_number().over(w))
+                        .filter("rn = 1").collect())}
+    assert oracle[(1, "click")] == 20           # the batch answer differs
+    assert rows[(2, "click")] == oracle[(2, "click")] == 21
+    assert rows[(None, "view")] == oracle[(None, "view")] == 11
+
+
 def test_threshold_alarm_fires_once_across_batches(spark, tmp_path):
     """Keyed accumulator state must SURVIVE micro-batch boundaries:
     user 1 crosses only with batch-2 spend (fires in batch 2), user 2
