@@ -284,6 +284,10 @@ def _memo_put(key: tuple, schema: T.StructType) -> None:
 #: reproduces the written dataType exactly (inference only forces
 #: top-level nullability); nested/char/exotic types skip write-time
 #: memo seeding and pay the normal first-read inference instead.
+#: TIMESTAMP_NTZ is exact whatever
+#: `spark.sql.parquet.inferTimestampNTZ.enabled` says: that conf only
+#: governs files without Spark's own schema in the footer, and every
+#: seeded directory is written by Spark (test_schema_memo pins it).
 _SEEDABLE_ATOMIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
                     T.FloatType, T.DoubleType, T.StringType,
                     T.BooleanType, T.DateType, T.TimestampType,
@@ -1516,7 +1520,18 @@ def upsert_into_keyed_table(spark: SparkSession, source: DataFrame, *,
     observe data without its matching property or vice versa.
     `user.`-prefixed keys only — engine-reserved names are refused;
     properties persist until overwritten (set a key to '' to drop
-    it)."""
+    it).
+
+    Single-pass contract: on the default and bucketed layouts the base
+    write is the ONLY Spark action over `source` — no pre-write count,
+    probe or cache; CHECK validation and `return_counts` ride that
+    same write job. An Observation a caller attaches to `source`
+    therefore latches once, over the complete pass, and is readable
+    right after this returns (the view round's touched-group count in
+    `views.py` relies on it). The range layout (`range_files`) adds a
+    `repartitionByRange` sampling pass over `source`, so callers that
+    count through an Observation stay off it. A change that adds an
+    action over `source` before the write breaks those counts."""
     from pyspark.sql import Observation
     schema_cols = source.columns if payload is None else [key, *payload]
     # ONE manifest resolution for the whole round: version, watermark

@@ -25,41 +25,29 @@ upsert statements with null-skip payloads (reference
 fields from `$set`); `MERGE ... WHEN MATCHED THEN UPDATE SET *
 WHEN NOT MATCHED THEN INSERT *` is that same operation as SQL text.
 
-Supported grammar (case-insensitive keywords, one statement):
+Grammar: Spark's own SQL parser defines what MERGE INTO, UPDATE,
+DELETE FROM, INSERT INTO and TRUNCATE TABLE accept (`_parse`);
+conditions, assignments and subqueries reach the engine as the
+statement's own text. COPY INTO, OPTIMIZE, VACUUM, RESTORE TABLE and
+`CREATE TABLE <n> KEY (<k>) LOCATION '<p>' AS SELECT ...` are not
+Spark syntax and keep small regexes. The engine then refuses, naming
+the construct: an ON condition other than one alias-qualified
+equality on the merge key; an unregistered target; a schema change
+(WITH SCHEMA EVOLUTION, or a source column the target lacks); an
+unknown SET column or a SET on the key; a WHEN NOT MATCHED action
+other than `INSERT *` (project the source instead); an INSERT whose
+arity mismatches or that misses the key, and INSERT OVERWRITE /
+PARTITION / IF NOT EXISTS / BY NAME; TRUNCATE ... PARTITION.
 
-    MERGE INTO <target> [AS] [<t_alias>]
-    USING (<any SELECT>) | <view_name> [AS] [<s_alias>]
-    ON <a>.<col> = <b>.<col>          -- target side must be the key
-    [ WHEN MATCHED [AND <cond>] THEN UPDATE SET *
-    | WHEN MATCHED [AND <cond>] THEN UPDATE SET c = <expr>, ...
-    | WHEN MATCHED [AND <cond>] THEN DELETE ]...
-    [ WHEN NOT MATCHED [AND <cond>] THEN INSERT * ]...
-    [ WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN DELETE
-    | WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN UPDATE SET ... ]...
-
-    UPDATE <target> [AS] [<alias>] SET c = <expr>, ... [WHERE <pred>]
-    DELETE FROM <target> [AS] [<alias>] [WHERE <pred>]
-    INSERT INTO <target> [(c, ...)] SELECT ... | VALUES (...), ...
-    TRUNCATE TABLE <target>
-    COPY INTO <target> FROM '<path>' [FILEFORMAT = <fmt>]
-        [FORMAT_OPTIONS(k = 'v', ...)]
-    OPTIMIZE <target> [ZORDER BY (<col>)]
-    VACUUM <target> [RETAIN <n> HOURS]
-    RESTORE TABLE <target> TO VERSION AS OF <n>
-    CREATE TABLE <name> KEY (<col>) LOCATION '<path>' AS SELECT ...
-
-Multiple WHEN MATCHED clauses evaluate FIRST-MATCH-WINS in statement
+Multiple clauses of a group evaluate FIRST-MATCH-WINS in statement
 order (ANSI MERGE / Delta Lake semantics); conditions may reference
-both aliases (`AND t.qty < s.qty`); an unconditional matched clause
-must come last (later clauses would be unreachable — refused). The
-same discipline applies to WHEN NOT MATCHED clauses (conditional
-inserts, r16 — Delta/ANSI parity; conditions see the source alias).
-`WHEN NOT MATCHED BY SOURCE` (Delta's full-sync extension) acts on
-TARGET rows the source lacks — delete them (replication sync) or
-update them with target-side expressions (mark stale); this side
-anti-joins the target against the source key set, O(target scan) by
-definition (every row must prove its absence), source side broadcast
-when small. The three clause groups are independent (ANSI).
+both aliases (`AND t.qty < s.qty`). `WHEN NOT MATCHED BY SOURCE`
+(Delta's full-sync extension) acts on TARGET rows the source lacks —
+delete them (replication sync) or update them with target-side
+expressions (mark stale); this side anti-joins the target against the
+source key set, O(target scan) by definition (every row must prove
+its absence), source side broadcast when small. The three clause
+groups are independent (ANSI).
 
 Semantics, mapped to the engine:
 
@@ -76,16 +64,11 @@ Semantics, mapped to the engine:
   semantics); `UPDATE` alone → only matched rows land.
 - `WHEN MATCHED THEN DELETE` → tombstone rows in the statement's one
   mixed delta (`append_merge_delta`), never a base rewrite.
+- `SET col = NULL` cannot express "overwrite with null" because the
+  engine's merge is null-skip BY DESIGN (use `delete` + re-insert,
+  same as the reference).
 
-Constraints (loud errors, never silent drift): the ON condition is
-a single key equality; `INSERT` takes only `*` (the null-skip union
-makes column-list inserts redundant — project the source instead);
-`SET col = NULL` cannot express "overwrite with null" because the
-engine's merge is null-skip BY DESIGN (use `delete` + re-insert,
-same as the reference); a source column the target lacks refuses
-the statement (MERGE never evolves the schema silently).
-
-Scale: one pass — parse (driver-side string work), one left join of
+Scale: one pass — parse (driver-side, no Spark job), one left join of
 source against the merged snapshot (fast-merge pruned, broadcast
 where small), ONE delta commit O(fired rows); the write-result
 counts ride the write job itself (`df.observe`), so the whole
@@ -109,6 +92,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -118,190 +102,201 @@ from .keyed_table import (_TOMBSTONE, append_delete_delta,
 
 
 class MergeSyntaxError(ValueError):
-    """The statement is outside the supported MERGE grammar (the
-    message names the failing clause and the accepted form)."""
+    """The statement is outside the supported write grammar (the
+    message names the refused construct)."""
 
 
-_MERGE_RE = re.compile(
-    r"^\s*MERGE\s+INTO\s+(?P<target>[A-Za-z_][\w.]*)"
-    r"(?:\s+AS)?(?:\s+(?P<talias>[A-Za-z_]\w*))?"
-    r"\s+USING\s+(?:\((?P<subquery>.+?)\)|(?P<srcname>[A-Za-z_][\w.]*))"
-    r"(?:\s+AS)?(?:\s+(?P<salias>[A-Za-z_]\w*))?"
-    r"\s+ON\s+(?P<on>.+?)"
-    r"(?P<clauses>\s+WHEN\s+.+)$",
-    re.IGNORECASE | re.DOTALL)
-
-_ON_RE = re.compile(
-    r"^\s*(?P<l>[A-Za-z_]\w*)\.(?P<lc>[A-Za-z_]\w*)\s*=\s*"
-    r"(?P<r>[A-Za-z_]\w*)\.(?P<rc>[A-Za-z_]\w*)\s*$")
-
-_WHEN_RE = re.compile(
-    r"WHEN\s+(?P<not>NOT\s+)?MATCHED(?P<bysrc>\s+BY\s+SOURCE)?"
-    r"(?:\s+AND\s+(?P<cond>.+?))?\s+THEN\s+"
-    r"(?P<action>UPDATE\s+SET\s+.+?|DELETE|INSERT\s+.+?)"
-    r"(?=\s+WHEN\s+(?:NOT\s+)?MATCHED|\s*$)",
-    re.IGNORECASE | re.DOTALL)
+# Spark's MERGE clause-order refusals, keyed by error condition
+_UNREACHABLE = {
+    "NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION": "WHEN MATCHED",
+    "NON_LAST_NOT_MATCHED_BY_TARGET_CLAUSE_OMIT_CONDITION":
+        "WHEN NOT MATCHED",
+    "NON_LAST_NOT_MATCHED_BY_SOURCE_CLAUSE_OMIT_CONDITION":
+        "WHEN NOT MATCHED BY SOURCE",
+}
 
 
-def _split_assignments(set_text: str) -> list[tuple[str, str]]:
-    """Split `a = expr, b = expr` on TOP-LEVEL commas — outside
-    parens (`SET v = greatest(a, b)`) AND outside single-quoted
-    literals (`SET tag = 'a,b'`; a paren inside a literal must not
-    skew the depth either: `SET tag = '(', qty = 2`)."""
-    parts, depth, cur, inq = [], 0, [], False
-    for ch in set_text:
-        if ch == "'":
-            inq = not inq
-        elif not inq:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        if ch == "," and depth == 0 and not inq:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    out = []
-    for p in parts:
-        if "=" not in p:
+def _parse(spark: SparkSession, text: str):
+    """Parse one statement with the session's Spark SQL parser into an
+    UNRESOLVED JVM logical plan (no analysis, no job — the target need
+    not exist in Spark's catalog). A parse failure becomes a
+    `MergeSyntaxError` carrying Spark's message."""
+    try:
+        return (spark._jsparkSession.sessionState().sqlParser()
+                .parsePlan(text))
+    except ParseException as exc:
+        group = _UNREACHABLE.get(exc.getCondition())
+        if group:
             raise MergeSyntaxError(
-                f"UPDATE SET assignment {p.strip()!r} is not of the "
-                f"form col = <expr>")
-        col, _, rhs = p.partition("=")
-        col = col.strip()
-        # tolerate a target-alias qualifier on the LHS (t.col = ...)
-        if "." in col:
-            col = col.split(".", 1)[1]
-        out.append((col, rhs.strip()))
+                f"a {group} clause after an unconditional one is "
+                f"unreachable (clauses evaluate first-match-wins in "
+                f"statement order)") from exc
+        raise MergeSyntaxError(str(exc).strip()) from exc
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _span(text: str, node) -> tuple[int, int] | None:
+    """(start, stop) of a parsed node in `text`, None for a shared
+    constant node (Spark reuses one `true` / `false` literal, which
+    carries another statement's origin)."""
+    o = node.origin()
+    sql = o.sqlText()
+    if sql.isDefined() and sql.get() == text:
+        return o.startIndex().get(), o.stopIndex().get()
+    return None
+
+
+def _text(text: str, node) -> str:
+    """The user's own text of a parsed expression or query: its origin
+    slice of `text`. A predicate (`x IN (...)`, `x IS NULL`, `x BETWEEN
+    ...`) records its origin from its keyword on, and its tested value
+    — its first child, wholly to the left of that keyword — drops the
+    parentheses around it. So the slice widens down that chain of
+    first children to the tested value's own start, then back over one
+    `(` per `)` that sits between the value and the keyword."""
+    span = _span(text, node)
+    if span is None:
+        return node.sql()
+    lo, hi = span
+    opens = 0
+    while node.children().nonEmpty():
+        child = node.children().head()
+        cspan = _span(text, child)
+        if cspan is None:
+            break
+        if cspan[1] < span[0]:               # tested value, left of keyword
+            opens += text.count(")", cspan[1] + 1, span[0])
+            lo = cspan[0]
+        elif cspan != span:                  # inside the node's own text
+            break
+        node, span = child, cspan            # same span: NOT IN = Not(In)
+    while opens:
+        j = len(text[:lo].rstrip()) - 1
+        if j < 0 or text[j] != "(":
+            break
+        lo, opens = j, opens - 1
+    return text[lo:hi + 1]
+
+
+def _cond(text: str, jopt) -> str | None:
+    return _text(text, jopt.get()) if jopt.isDefined() else None
+
+
+def _target(node) -> tuple[str, str | None]:
+    """(table name, alias) of a write target: `t`, `t AS a`, `db.t a`."""
+    alias = None
+    if node.nodeName() == "SubqueryAlias":
+        alias, node = node.alias(), node.child()
+    if node.nodeName() not in ("UnresolvedRelation", "UnresolvedTable"):
+        raise MergeSyntaxError(
+            f"write target must be a table name (got {node.nodeName()})")
+    return node.multipartIdentifier().mkString("."), alias
+
+
+def _assignments(text: str, jassigns) -> list[tuple[str, str]]:
+    """[(column, expression text)] of a SET list; a qualifier on the
+    column (`t.col = ...`) is dropped."""
+    out = []
+    for a in _seq(jassigns):
+        parts = _seq(a.key().nameParts())
+        out.append((".".join(parts[1:] or parts), _text(text, a.value())))
     return out
 
 
 def _bind(thunk, what: str):
-    """Run a plan-binding step (filter/select over statement-supplied
-    expression text), surfacing parse/analysis failures as statement
-    errors. Spark 4's Column API defers expression PARSING to first
-    plan use, so the guard must sit at binding, not at `F.expr`: a
-    quoted literal containing clause keywords (` WHERE `, `, `) can
-    split the regex-scoped clause mid-literal — the mangled halves
-    then fail the parser here, and that failure should read as a
-    loud statement refusal, never a bare JVM traceback."""
-    from pyspark.errors import AnalysisException, ParseException
+    """Run a plan-binding step over statement-supplied expression text
+    (filter/select), surfacing analysis failures — an unknown column,
+    a type error — as statement errors. Spark 4's Column API defers
+    expression analysis to first plan use, so the guard sits at
+    binding, not at `F.expr`."""
     try:
         return thunk()
     except (ParseException, AnalysisException) as exc:
         first = str(exc).splitlines()[0] if str(exc) else repr(exc)
         raise MergeSyntaxError(
-            f"cannot parse/resolve {what}: {first} (a quoted "
-            f"literal containing clause keywords can split the "
-            f"clause — check quote placement)") from exc
+            f"cannot parse/resolve {what}: {first}") from exc
 
 
-# Leading SQL line comments before the statement keyword (the CLI
-# dispatch and every parser must see through them — ADVICE r15).
-_LEADING_COMMENTS = r"(?:\s*--[^\n]*\n)*\s*"
+# Leading SQL comments — `--` lines and `/* ... */` blocks — before the
+# statement keyword: the CLI dispatch and the regex-parsed verbs must
+# see through them (ADVICE r15).
+_LEADING_COMMENTS = r"(?:\s*(?:--[^\n]*(?:\n|$)|/\*[\s\S]*?\*/))*\s*"
 
 
 def _strip_leading_comments(text: str) -> str:
-    """Drop `--` line comments preceding the statement keyword so a
+    """Drop the comments preceding the statement keyword so a
     comment-headed statement parses identically to a bare one (the
     dispatch in `write_statement_kind` already sees through them —
-    the parsers must agree, ADVICE r15)."""
+    the regex-parsed verbs must agree, ADVICE r15)."""
     return re.sub("^" + _LEADING_COMMENTS, "", text, count=1)
 
 
-def parse_merge(text: str) -> dict:
-    """Parse the constrained MERGE grammar into
+def parse_merge(spark: SparkSession, text: str) -> dict:
+    """Parse a MERGE statement (Spark's parser) into
     {target, talias, source_sql|source_name, salias, on: (l, lc, r,
     rc), matched: [(cond|None, ('update', '*'|[(col, expr)...]) |
-    ('delete', None)), ... in statement order], insert: [cond|None,
-    ... in statement order] (empty = no insert clause)}.
-    Raises `MergeSyntaxError` outside the grammar. Standard MERGE
-    clause semantics: each clause GROUP evaluates FIRST-MATCH-WINS in
-    statement order, so an UNCONDITIONAL clause must be the last of
-    its group (anything after it is unreachable — refused)."""
-    m = _MERGE_RE.match(_strip_leading_comments(text).strip()
-                        .rstrip(";"))
-    if not m:
+    ('delete', None)), ... in statement order], by_source: [same
+    shape], insert: [cond|None, ... in statement order] (empty = no
+    insert clause)}. Conditions and expressions are the statement's
+    own text. Raises `MergeSyntaxError` on a statement Spark cannot
+    parse or the engine cannot execute (see the module docstring)."""
+    plan = _parse(spark, text)
+    if plan.nodeName() != "MergeIntoTable":
+        raise MergeSyntaxError("statement is not a MERGE INTO statement")
+    if plan.withSchemaEvolution():
         raise MergeSyntaxError(
-            "statement is not of the form MERGE INTO <t> USING "
-            "<src|(<select>)> ON <a>.<k> = <b>.<k> WHEN ... — see "
-            "sql_merge's supported grammar")
-    on = _ON_RE.match(m.group("on"))
-    if not on:
+            "MERGE WITH SCHEMA EVOLUTION is refused — MERGE does not "
+            "evolve the schema; evolve the table first (append_delta/"
+            "upsert with schema_mode='merge')")
+    target, talias = _target(plan.targetTable())
+    src, salias = plan.sourceTable(), None
+    if src.nodeName() == "SubqueryAlias":
+        salias, src = src.alias(), src.child()
+    source_name = (src.multipartIdentifier().mkString(".")
+                   if src.nodeName() == "UnresolvedRelation" else None)
+    on = plan.mergeCondition()
+    sides = [on.left(), on.right()] if on.nodeName() == "EqualTo" else []
+    names = [_seq(s.nameParts()) for s in sides
+             if s.nodeName() == "UnresolvedAttribute"]
+    if len(names) != 2 or any(len(n) != 2 for n in names):
         raise MergeSyntaxError(
-            f"ON condition {m.group('on').strip()!r} must be a single "
+            f"ON condition {_text(text, on)!r} must be a single "
             f"alias-qualified key equality: <a>.<key> = <b>.<key>")
-    spec = {"target": m.group("target"),
-            "talias": m.group("talias") or m.group("target"),
-            "source_sql": m.group("subquery"),
-            "source_name": m.group("srcname"),
-            "salias": m.group("salias") or m.group("srcname") or "src",
-            "on": (on.group("l"), on.group("lc"),
-                   on.group("r"), on.group("rc")),
-            "matched": [], "by_source": [], "insert": []}
-    clauses = _WHEN_RE.findall(m.group("clauses"))
-    if not clauses:
-        raise MergeSyntaxError("no WHEN [NOT] MATCHED clause found")
 
-    def _parse_action(a, au, where):
-        if au == "DELETE":
+    def _action(a, where):
+        kind = a.nodeName()
+        if kind == "DeleteAction":
             return ("delete", None)
-        if au.startswith("UPDATE"):
-            set_text = re.sub(r"^UPDATE\s+SET\s+", "", a,
-                              flags=re.IGNORECASE | re.DOTALL)
-            return ("update", "*" if set_text.strip() == "*"
-                    else _split_assignments(set_text))
-        raise MergeSyntaxError(f"unsupported {where} action {a!r} "
+        if kind == "UpdateStarAction":
+            return ("update", "*")
+        if kind == "UpdateAction":
+            return ("update", _assignments(text, a.assignments()))
+        raise MergeSyntaxError(f"unsupported {where} action {kind} "
                                f"(UPDATE SET ... or DELETE)")
 
-    for is_not, bysrc, cond, action in clauses:
-        a = action.strip()
-        au = a.upper()
-        cond = cond.strip() or None if cond else None
-        if is_not and bysrc:
-            # NOT MATCHED BY SOURCE: target rows the source lacks
-            if spec["by_source"] and spec["by_source"][-1][0] is None:
-                raise MergeSyntaxError(
-                    "a WHEN NOT MATCHED BY SOURCE clause after an "
-                    "unconditional one is unreachable")
-            act = _parse_action(a, au, "WHEN NOT MATCHED BY SOURCE")
-            if act[1] == "*":
-                raise MergeSyntaxError(
-                    "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET * is "
-                    "meaningless (there is no source row to copy) — "
-                    "assign explicit target-side expressions")
-            spec["by_source"].append((cond, act))
-            continue
-        if bysrc:
+    inserts = []
+    for a in _seq(plan.notMatchedActions()):
+        if a.nodeName() != "InsertStarAction":
             raise MergeSyntaxError(
-                "WHEN MATCHED BY SOURCE is not a MERGE clause — use "
-                "WHEN MATCHED or WHEN NOT MATCHED BY SOURCE")
-        if is_not:
-            if au != "INSERT *":
-                raise MergeSyntaxError(
-                    f"WHEN NOT MATCHED supports only INSERT * (got "
-                    f"{a!r}); project the source subquery instead of "
-                    f"a column-list insert")
-            if spec["insert"] and spec["insert"][-1] is None:
-                raise MergeSyntaxError(
-                    "a WHEN NOT MATCHED clause after an unconditional "
-                    "one is unreachable (clauses evaluate "
-                    "first-match-wins in statement order)")
-            spec["insert"].append(cond)
-            continue
-        if (spec["matched"] and spec["matched"][-1][0] is None):
-            raise MergeSyntaxError(
-                "a WHEN MATCHED clause after an unconditional one is "
-                "unreachable (clauses evaluate first-match-wins in "
-                "statement order)")
-        spec["matched"].append((cond, _parse_action(a, au,
-                                                    "WHEN MATCHED")))
-    if (not spec["matched"] and not spec["insert"]
-            and not spec["by_source"]):
-        raise MergeSyntaxError("statement performs no action")
-    return spec
+                "WHEN NOT MATCHED supports only INSERT * (got a "
+                "column-list INSERT); project the source subquery "
+                "instead")
+        inserts.append(_cond(text, a.condition()))
+    return {"target": target, "talias": talias or target,
+            "source_sql": None if source_name else _text(text, src),
+            "source_name": source_name,
+            "salias": salias or source_name or "src",
+            "on": (*names[0], *names[1]),
+            "matched": [(_cond(text, a.condition()),
+                         _action(a, "WHEN MATCHED"))
+                        for a in _seq(plan.matchedActions())],
+            "by_source": [(_cond(text, a.condition()),
+                           _action(a, "WHEN NOT MATCHED BY SOURCE"))
+                          for a in _seq(plan.notMatchedBySourceActions())],
+            "insert": inserts}
 
 
 def sql_merge(spark: SparkSession, text: str, *,
@@ -313,13 +308,8 @@ def sql_merge(spark: SparkSession, text: str, *,
     one flag powers reads (`register_sql_view`) and writes. Returns
     {action, n_source, n_matched, n_inserted|n_deleted, delta_version}.
     """
-    spec = parse_merge(text)
-    if spec["target"] not in tables:
-        raise MergeSyntaxError(
-            f"MERGE target {spec['target']!r} is not a registered "
-            f"keyed table (known: {sorted(tables)}); register it "
-            f"with --keyed NAME=PATH:KEY")
-    path, key = tables[spec["target"]]
+    spec = parse_merge(spark, text)
+    path, key = _resolve_target(spec["target"], tables, "MERGE")
     ta, sa = spec["talias"], spec["salias"]
     on_l, on_lc, on_r, on_rc = spec["on"]
     if {on_l, on_r} != {ta, sa}:
@@ -566,19 +556,6 @@ def _counted(spark: SparkSession, path: str, df: DataFrame, aggs):
     return df.observe(obs, *aggs), (lambda: obs.get)
 
 
-_UPDATE_RE = re.compile(
-    r"^\s*UPDATE\s+(?P<target>[A-Za-z_][\w.]*)"
-    r"(?:\s+AS)?(?:\s+(?P<alias>[A-Za-z_]\w*))?"
-    r"\s+SET\s+(?P<sets>.+?)"
-    r"(?:\s+WHERE\s+(?P<where>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL)
-
-_DELETE_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(?P<target>[A-Za-z_][\w.]*)"
-    r"(?:\s+AS)?(?:\s+(?P<alias>[A-Za-z_]\w*))?"
-    r"(?:\s+WHERE\s+(?P<where>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL)
-
 _WRITE_KIND_RE = re.compile(
     _LEADING_COMMENTS + r"(?P<kw>MERGE|UPDATE|DELETE|INSERT|TRUNCATE"
     r"|COPY|OPTIMIZE|VACUUM|RESTORE|CREATE)\b",
@@ -590,8 +567,9 @@ def write_statement_kind(text: str) -> str | None:
     'copy' | 'optimize' | 'vacuum' when `text` is a write/maintenance
     statement this module executes, None for anything else (a read —
     route to spark.sql). Word-boundary match after optional leading
-    `--` line comments, so `SELECT merge_col FROM t` and
-    `/* note */ SELECT ...` are NOT misrouted (ADVICE r15: the old
+    `--` line and `/* */` block comments, so `SELECT merge_col FROM
+    t` and `/* note */ SELECT ...` are NOT misrouted while
+    `/* nightly */ MERGE ...` is (ADVICE r15: the old
     CLI prefix test `text[:5] == 'MERGE'` was not boundary-safe and
     missed comment-prefixed statements). CREATE routes here ONLY in
     its keyed-CTAS form (`CREATE TABLE n KEY (k) …`) — plain
@@ -617,6 +595,24 @@ def _resolve_target(spec_target: str, tables: dict, what: str):
     return tables[spec_target]
 
 
+def _delete_rows(spark: SparkSession, path: str, key: str, alias: str,
+                 where: str | None) -> tuple[int, int]:
+    """Tombstone the keys of the merged rows matching `where` (every
+    row when None) as ONE delete delta; returns (n_deleted, version)."""
+    victims = read_merged(spark, path, key).alias(alias)
+    if where is not None:
+        victims = _bind(lambda: victims.filter(F.expr(where)),
+                        "DELETE WHERE")
+    # merged rows are unique per key, so count(*) = deleted keys; the
+    # count rides the tombstone write (no checks run on deletes, so
+    # the Observation is safe unconditionally — see _counted)
+    obs = Observation()
+    victims = victims.observe(obs, F.count(F.lit(1)).alias("n"))
+    v = append_delete_delta(spark, victims.select(key),
+                            path=path, key=key)
+    return int(obs.get["n"]), v
+
+
 def sql_delete(spark: SparkSession, text: str, *,
                tables: dict[str, tuple[str, str]]) -> dict:
     """`DELETE FROM t [AS a] [WHERE p]` against a keyed table: the
@@ -627,27 +623,16 @@ def sql_delete(spark: SparkSession, text: str, *,
     missing WHERE deletes every row (standard SQL), still as
     tombstones so time travel keeps history. Returns
     {action, n_deleted, delta_version}."""
-    m = _DELETE_RE.match(_strip_leading_comments(text))
-    if not m:
+    plan = _parse(spark, text)
+    if plan.nodeName() != "DeleteFromTable":
         raise MergeSyntaxError(
             "statement is not of the form DELETE FROM <t> [AS a] "
             "[WHERE <pred>]")
-    path, key = _resolve_target(m.group("target"), tables, "DELETE")
-    alias = m.group("alias") or m.group("target")
-    victims = read_merged(spark, path, key).alias(alias)
-    if m.group("where"):
-        w = m.group("where")
-        victims = _bind(lambda: victims.filter(F.expr(w)),
-                        "DELETE WHERE")
-    # merged rows are unique per key, so count(*) = deleted keys; the
-    # count rides the tombstone write (no checks run on deletes, so
-    # the Observation is safe unconditionally — see _counted)
-    obs = Observation()
-    victims = victims.observe(obs, F.count(F.lit(1)).alias("n"))
-    v = append_delete_delta(spark, victims.select(key),
-                            path=path, key=key)
-    return {"action": "delete", "n_deleted": int(obs.get["n"]),
-            "delta_version": v}
+    name, alias = _target(plan.table())
+    path, key = _resolve_target(name, tables, "DELETE")
+    n, v = _delete_rows(spark, path, key, alias or name,
+                        _text(text, plan.condition()))
+    return {"action": "delete", "n_deleted": n, "delta_version": v}
 
 
 def sql_update(spark: SparkSession, text: str, *,
@@ -662,17 +647,16 @@ def sql_update(spark: SparkSession, text: str, *,
     cannot express overwrite-with-null (delete + re-insert is the
     escape hatch, exactly the reference's $set posture). Returns
     {action, n_updated, delta_version}."""
-    m = _UPDATE_RE.match(_strip_leading_comments(text))
-    if not m:
+    plan = _parse(spark, text)
+    if plan.nodeName() != "UpdateTable":
         raise MergeSyntaxError(
             "statement is not of the form UPDATE <t> [AS a] SET "
             "c = <expr>[, ...] [WHERE <pred>]")
-    path, key = _resolve_target(m.group("target"), tables, "UPDATE")
-    alias = m.group("alias") or m.group("target")
-    schema = table_schema(spark, path)
-    tgt_fields = {f.name: f.dataType for f in schema}
+    name, alias = _target(plan.table())
+    path, key = _resolve_target(name, tables, "UPDATE")
+    tgt_fields = {f.name: f.dataType for f in table_schema(spark, path)}
     assigned = {}
-    for col, rhs in _split_assignments(m.group("sets")):
+    for col, rhs in _assignments(text, plan.assignments()):
         if col not in tgt_fields:
             raise MergeSyntaxError(
                 f"UPDATE SET assigns unknown column(s) ['{col}'] "
@@ -682,10 +666,10 @@ def sql_update(spark: SparkSession, text: str, *,
                 f"UPDATE SET cannot assign the merge key {key!r} — "
                 f"a key change is a delete + insert")
         assigned[col] = rhs
-    rows = read_merged(spark, path, key).alias(alias)
-    if m.group("where"):
-        w = m.group("where")
-        rows = _bind(lambda: rows.filter(F.expr(w)), "UPDATE WHERE")
+    rows = read_merged(spark, path, key).alias(alias or name)
+    where = _cond(text, plan.condition())
+    if where is not None:
+        rows = _bind(lambda: rows.filter(F.expr(where)), "UPDATE WHERE")
     cols = [F.col(key).cast(tgt_fields[key]).alias(key)]
     for c, dt in tgt_fields.items():
         if c == key:
@@ -736,17 +720,6 @@ def sql_write(spark: SparkSession, text: str, *,
         "SELECT)")
 
 
-_INSERT_RE = re.compile(
-    r"^\s*INSERT\s+INTO\s+(?P<target>[A-Za-z_][\w.]*)"
-    r"\s*(?:\((?P<cols>[^)]*)\))?"
-    r"\s*(?P<body>SELECT\b.+|VALUES\s*\(.+)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL)
-
-_TRUNCATE_RE = re.compile(
-    r"^\s*TRUNCATE\s+TABLE\s+(?P<target>[A-Za-z_][\w.]*)\s*;?\s*$",
-    re.IGNORECASE)
-
-
 def sql_insert(spark: SparkSession, text: str, *,
                tables: dict[str, tuple[str, str]]) -> dict:
     """`INSERT INTO t [(c, ...)] SELECT ...` / `... VALUES (...), ...`
@@ -764,24 +737,35 @@ def sql_insert(spark: SparkSession, text: str, *,
     insert that cannot name its keys is refused (null keys would be
     silently dropped by normalization). Returns
     {action, n_inserted, delta_version}."""
-    m = _INSERT_RE.match(_strip_leading_comments(text))
-    if not m:
+    plan = _parse(spark, text)
+    if plan.nodeName() != "InsertIntoStatement":
         raise MergeSyntaxError(
             "statement is not of the form INSERT INTO <t> [(cols)] "
             "SELECT ... | VALUES (...), ...")
-    path, key = _resolve_target(m.group("target"), tables, "INSERT")
+    refused = [clause for clause, on in (
+        ("OVERWRITE", plan.overwrite()),
+        ("PARTITION", plan.partitionSpec().nonEmpty()),
+        ("IF NOT EXISTS", plan.ifPartitionNotExists()),
+        ("BY NAME", plan.byName())) if on]
+    if refused:
+        raise MergeSyntaxError(
+            f"INSERT {' / '.join(refused)} is refused — a keyed table "
+            f"takes INSERT INTO <t> [(cols)] with positional columns "
+            f"(use TRUNCATE TABLE + INSERT to replace the contents)")
+    name, _alias = _target(plan.table())
+    path, key = _resolve_target(name, tables, "INSERT")
     schema = table_schema(spark, path)
     tgt_fields = {f.name: f.dataType for f in schema}
-    df = spark.sql(m.group("body"))
-    if m.group("cols") is not None:
-        cols = [c.strip() for c in m.group("cols").split(",")]
-        unknown = [c for c in cols if c not in tgt_fields]
-        if unknown:
-            raise MergeSyntaxError(
-                f"INSERT column list names unknown column(s) "
-                f"{unknown} (table columns: {sorted(tgt_fields)})")
-    else:
-        cols = [f.name for f in schema]
+    query = plan.query()
+    df = (spark.table(query.multipartIdentifier().mkString("."))
+          if query.nodeName() == "UnresolvedRelation"      # INSERT ... TABLE t
+          else spark.sql(_text(text, query)))
+    cols = _seq(plan.userSpecifiedCols()) or [f.name for f in schema]
+    unknown = [c for c in cols if c not in tgt_fields]
+    if unknown:
+        raise MergeSyntaxError(
+            f"INSERT column list names unknown column(s) "
+            f"{unknown} (table columns: {sorted(tgt_fields)})")
     if len(df.columns) != len(cols):
         raise MergeSyntaxError(
             f"INSERT provides {len(df.columns)} value column(s) for "
@@ -809,14 +793,19 @@ def sql_truncate(spark: SparkSession, text: str, *,
     """`TRUNCATE TABLE t`: tombstone every current key — one
     O(live keys) delta append, no base rewrite, history preserved
     for time travel (`compact` reclaims physically). Equivalent to
-    `DELETE FROM t` and routed the same way."""
-    m = _TRUNCATE_RE.match(_strip_leading_comments(text))
-    if not m:
+    `DELETE FROM t`: the same tombstone append."""
+    plan = _parse(spark, text)
+    if plan.nodeName() == "TruncatePartition":
+        raise MergeSyntaxError(
+            "TRUNCATE TABLE ... PARTITION is refused — a keyed table "
+            "has no partitions")
+    if plan.nodeName() != "TruncateTable":
         raise MergeSyntaxError(
             "statement is not of the form TRUNCATE TABLE <t>")
-    out = sql_delete(spark, f"DELETE FROM {m.group('target')}",
-                     tables=tables)
-    return {**out, "action": "truncate"}
+    name, _alias = _target(plan.child())
+    path, key = _resolve_target(name, tables, "TRUNCATE")
+    n, v = _delete_rows(spark, path, key, name, None)
+    return {"action": "truncate", "n_deleted": n, "delta_version": v}
 
 
 _COPY_RE = re.compile(

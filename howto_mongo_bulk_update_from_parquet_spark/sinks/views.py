@@ -435,7 +435,9 @@ def _apply_differential(spark: SparkSession, table_path: str, key: str,
     # the view upsert's write job itself (r17). Sound for the
     # recompute branch too: rc_full substitutes exactly one row per
     # flagged group, so the final frame's count equals the observed
-    # frame's.
+    # frame's. The non-minmax form relies on upsert_into_keyed_table's
+    # single-pass contract (see its docstring): the base write is the
+    # only action over `merged`.
     touch_obs = Observation(f"touched_{_uuid.uuid4().hex[:8]}")
     merged = merged.observe(touch_obs,
                             F.count(F.lit(1)).alias("__n"))

@@ -26,10 +26,11 @@ def test_entry_contract(spark):
     assert "sum_qty" in df.columns and "count_order" in df.columns
 
 
-def test_every_query_returns_dataframe_lazily(spark):
+def test_every_query_returns_dataframe_lazily(catalog_frames):
     # construction (no action) must be cheap and not raise
-    for name, fn in all_queries().items():
-        df = fn(spark, SF)
+    frames = catalog_frames(SF)
+    assert set(frames) == set(all_queries())
+    for name, df in frames.items():
         assert df.columns, f"{name} produced no columns"
 
 

@@ -236,7 +236,8 @@ def test_bucketed_join_has_no_exchange_on_join_inputs(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_catalog_wide_no_global_windows_cartesians_or_row_udfs(spark):
+def test_catalog_wide_no_global_windows_cartesians_or_row_udfs(
+        catalog_frames):
     """Sweep EVERY batch catalog query's plan for the three
     anti-patterns the per-query pins can't cover exhaustively:
     - unpartitioned windows (all rows → one WindowExec partition);
@@ -246,17 +247,15 @@ def test_catalog_wide_no_global_windows_cartesians_or_row_udfs(spark):
     - CartesianProduct
     - row-at-a-time Python evaluation (BatchEvalPython[UDTF]; the
       Arrow forms ArrowEvalPython[UDTF] / MapInPandas are fine)
-    Streaming queries are skipped: constructing them runs the stream
-    (cost), and their returned plan is a memory-table scan."""
+    Streaming queries are skipped: their returned plan is a
+    memory-table scan."""
     import re
-    from howto_mongo_bulk_update_from_parquet_spark.plans import all_queries
     unpart = re.compile(
         r"windowspecdefinition\((specifiedwindowframe|\S+ (ASC|DESC) NULLS)")
     findings = {}
-    for name, fn in sorted(all_queries().items()):
+    for name, df in sorted(catalog_frames(SF).items()):
         if name.startswith("q_stream_"):
             continue
-        df = fn(spark, SF)
         opt = df._jdf.queryExecution().optimizedPlan().toString()
         phys = df._jdf.queryExecution().executedPlan().toString()
         probs = []
@@ -338,17 +337,16 @@ from howto_mongo_bulk_update_from_parquet_spark.operators.plan_audit import (  #
 )
 
 
-def test_catalog_wide_no_undocumented_tiny_key_windows(spark):
+def test_catalog_wide_no_undocumented_tiny_key_windows(catalog_frames):
     """Sweep every batch query for full-table windows partitioned by
     pinned-tiny-cardinality keys (the q_mad_outliers /
     q_weighted_median hazard class fixed in r7): the findings must
     exactly equal the documented-inherent allowlist."""
-    from howto_mongo_bulk_update_from_parquet_spark.plans import all_queries
     findings = {}
-    for name, fn in sorted(all_queries().items()):
+    for name, df in sorted(catalog_frames(SF).items()):
         if name.startswith("q_stream_"):
             continue
-        h = _tiny_key_window_hazards(fn(spark, SF), _TINY_KEYS)
+        h = _tiny_key_window_hazards(df, _TINY_KEYS)
         if h:
             findings[name] = h
     assert findings == _DOCUMENTED_TINY_WINDOWS, findings

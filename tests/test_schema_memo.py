@@ -75,3 +75,30 @@ def test_memo_is_schema_only_not_results(spark, tmp_path):
     got = {r["_id"]: r.asDict() for r in
            read_merged(spark, path, "_id").collect()}
     assert got["b"]["tag"] == "y9" and got["b"]["v"] == 2.0
+
+
+def test_ntz_seed_matches_cold_read_with_ntz_inference_off(spark, tmp_path):
+    """The writer's seeded schema and a cold footer read agree on a
+    TIMESTAMP_NTZ column even with
+    `spark.sql.parquet.inferTimestampNTZ.enabled` off: that conf only
+    applies to parquet files without Spark's schema in the footer, and
+    the engine's directories are always written by Spark."""
+    from datetime import datetime
+
+    conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        path = os.path.join(str(tmp_path), "t")
+        # the upsert reads its new base back through the seeded memo
+        seeded = upsert_into_keyed_table(
+            spark, spark.createDataFrame([("a", datetime(2024, 1, 2, 3))],
+                                         "_id string, ts timestamp_ntz"),
+            path=path, key="_id", updated_at_col=None
+        ).schema["ts"].dataType
+        base = [d for d in os.listdir(path) if d.startswith("base_v")]
+        cold = spark.read.parquet(os.path.join(path, base[0])
+                                  ).schema["ts"].dataType
+        assert seeded == cold
+    finally:
+        spark.conf.set(conf, prev)

@@ -46,6 +46,14 @@ def test_merge_update_star_insert_star(spark, tmp_path):
     assert st[2] == (99, "t2")            # qty updated, tag kept
     assert st[9] == (900, "new")
     assert st[1] == (10, "t1")
+    # a trailing line comment is not part of the last clause
+    spark.createDataFrame([(3, 33, None)], "k long, qty long, tag string"
+                          ).createOrReplaceTempView("stage")
+    sql_merge(spark, """
+        MERGE INTO t USING stage AS s ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET *  -- nightly sync
+        """, tables={"t": (path, "k")})
+    assert _state(spark, path)[3] == (33, "t3")
 
 
 def test_merge_partial_set_and_cross_alias_expr(spark, tmp_path):
@@ -78,6 +86,19 @@ def test_merge_insert_only_and_subquery_source(spark, tmp_path):
     st = _state(spark, path)
     assert st[1] == (10, "t1")            # matched row untouched
     assert st[50] == (500, "FRESH")       # subquery expr applied
+    # a CTE in USING whose body joins a derived table (`) x ON`)
+    spark.createDataFrame([Row(k=60, qty=-6, tag="cte")]
+                          ).createOrReplaceTempView("stage")
+    sql_merge(spark, """
+        MERGE INTO t USING (
+            WITH d AS (SELECT k, CASE WHEN qty < 0 THEN -qty END AS qty
+                       FROM stage)
+            SELECT d.k, d.qty, x.tag
+            FROM d JOIN (SELECT k, tag FROM stage) x ON d.k = x.k
+        ) s ON t.k = s.k
+        WHEN NOT MATCHED THEN INSERT *""",
+        tables={"t": (path, "k")})
+    assert _state(spark, path)[60] == (6, "cte")
 
 
 def test_merge_delete(spark, tmp_path):
@@ -90,6 +111,13 @@ def test_merge_delete(spark, tmp_path):
         tables={"t": (path, "k")})
     assert out["n_deleted"] == 2
     assert set(_state(spark, path)) == {1, 3}
+    # backticked ON columns name the same key
+    spark.createDataFrame([Row(k=3)]).createOrReplaceTempView("victims")
+    out = sql_merge(spark, """
+        MERGE INTO t USING victims v ON t.`k` = v.`k`
+        WHEN MATCHED THEN DELETE""",
+        tables={"t": (path, "k")})
+    assert out["n_deleted"] == 1 and set(_state(spark, path)) == {1}
 
 
 def test_merge_partial_update_plus_insert_star(spark, tmp_path):
@@ -147,8 +175,8 @@ def test_merge_syntax_errors_are_loud(spark, tmp_path):
                          "WHEN NOT MATCHED THEN INSERT *", tables=tables)
 
 
-def test_parse_merge_shapes():
-    spec = parse_merge("""
+def test_parse_merge_shapes(spark):
+    spec = parse_merge(spark, """
         MERGE INTO tbl AS t
         USING (SELECT 1 AS k, greatest(2, 3) AS v) AS s
         ON t.k = s.k
@@ -164,12 +192,12 @@ def test_parse_merge_shapes():
                            ("w", "s.w")]))]
     assert spec["insert"] == [None]
     spec2 = parse_merge(
-        "MERGE INTO t USING s ON t.k = s.k "
+        spark, "MERGE INTO t USING s ON t.k = s.k "
         "WHEN NOT MATCHED AND s.v > 0 THEN INSERT * "
         "WHEN NOT MATCHED THEN INSERT *")
     assert spec2["insert"] == ["s.v > 0", None]
     with pytest.raises(MergeSyntaxError, match="unreachable"):
-        parse_merge("MERGE INTO t USING s ON t.k = s.k "
+        parse_merge(spark, "MERGE INTO t USING s ON t.k = s.k "
                     "WHEN NOT MATCHED THEN INSERT * "
                     "WHEN NOT MATCHED AND s.v > 0 THEN INSERT *")
 
@@ -199,6 +227,21 @@ def test_merge_conditional_clauses_first_match_wins(spark, tmp_path):
     assert st[3] == (30, "z")            # NULL cond -> fallback: tag
     assert st[4] == (40, "w")            # fallback: tag only
     assert st[9] == (90, "new")
+    # a condition whose tested value is a function call or a CAST
+    spark.createDataFrame(
+        [(2, 5, None), (3, 6, "q"), (7, 3, "n"), (8, 9, "m")],
+        "k long, qty long, tag string").createOrReplaceTempView("stage")
+    out = sql_merge(spark, """
+        MERGE INTO t USING stage s ON t.k = s.k
+        WHEN MATCHED AND upper(s.tag) IS NOT NULL
+             THEN UPDATE SET tag = upper(s.tag)
+        WHEN NOT MATCHED AND CAST(s.qty AS DOUBLE) BETWEEN 1 AND 5
+             THEN INSERT *""",
+        tables={"t": (path, "k")})
+    assert out["n_matched"] == 1 and out["n_inserted"] == 1
+    st = _state(spark, path)
+    assert st[2] == (100, "t2") and st[3] == (30, "Q")
+    assert st[7] == (3, "n") and 8 not in st
 
 
 def test_cli_sql_merge_verb(spark, tmp_path, capsys):
@@ -340,7 +383,8 @@ def test_merge_by_source_syntax_guards(spark, tmp_path):
     spark.createDataFrame([Row(k=1, qty=1, tag="x")]
                           ).createOrReplaceTempView("stage")
     tables = {"t": (path, "k")}
-    with pytest.raises(MergeSyntaxError, match="no source row"):
+    with pytest.raises(MergeSyntaxError,
+                       match="Syntax error at or near '\\*'"):
         sql_merge(spark, "MERGE INTO t USING stage s ON t.k = s.k "
                          "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET *",
                   tables=tables)
@@ -391,6 +435,21 @@ def test_merge_conditional_insert(spark, tmp_path):
     assert st[2] == (222, "t2")
     assert st[8] == (80, "big")
     assert 9 not in st                   # filtered by the condition
+    # clause keywords inside a condition's literal stay in the literal
+    spark.createDataFrame(
+        [(3, 333, " WHEN NOT MATCHED THEN INSERT *"), (4, 444, "no"),
+         (10, 100, "ins")],
+        "k long, qty long, tag string").createOrReplaceTempView("stage")
+    out = sql_merge(spark, """
+        MERGE INTO t USING stage s ON t.k = s.k
+        WHEN MATCHED AND s.tag = ' WHEN NOT MATCHED THEN INSERT *'
+             THEN UPDATE SET qty = s.qty
+        WHEN NOT MATCHED THEN INSERT *""",
+        tables={"t": (path, "k")})
+    assert out["n_matched"] == 1 and out["n_inserted"] == 1
+    st = _state(spark, path)
+    assert st[3] == (333, "t3") and st[4] == (40, "t4")
+    assert st[10] == (100, "ins")
 
 
 def test_merge_conditional_insert_mixed_with_conditional_matched(
@@ -500,6 +559,26 @@ def test_sql_update_statement(spark, tmp_path):
     sql_update(spark, "UPDATE t SET tag = NULL WHERE k = 1",
                tables={"t": (path, "k")})
     assert _state(spark, path)[1] == (20, "t1!")
+    # an IN subquery in WHERE selects the rows; a scalar subquery in
+    # SET supplies the value (both carry their own WHERE)
+    spark.createDataFrame([Row(k=2, why="late"), Row(k=3, why="ok")]
+                          ).createOrReplaceTempView("flagged")
+    out = sql_update(spark, "UPDATE t SET tag = (SELECT max(why) FROM "
+                            "flagged WHERE why <> 'ok') WHERE k IN "
+                            "(SELECT k FROM flagged WHERE why = 'late')",
+                     tables={"t": (path, "k")})
+    assert out["n_updated"] == 1
+    st = _state(spark, path)
+    assert st[2] == (40, "late") and st[3] == (62, "t3!")
+    # a WHERE whose tested value is a CAST or a function call
+    out = sql_update(spark, "UPDATE t SET qty = qty + 1 WHERE "
+                            "CAST(qty AS DOUBLE) BETWEEN 40 AND 62",
+                     tables={"t": (path, "k")})
+    assert out["n_updated"] == 2
+    sql_update(spark, "UPDATE t SET tag = 'low' WHERE lower(tag) IN "
+                      "('t1!', 'x')", tables={"t": (path, "k")})
+    assert _state(spark, path) == {1: (20, "low"), 2: (41, "late"),
+                                   3: (63, "t3!"), 4: (82, "t4!")}
     with pytest.raises(MergeSyntaxError, match="unknown column"):
         sql_update(spark, "UPDATE t SET nope = 1",
                    tables={"t": (path, "k")})
@@ -524,6 +603,12 @@ def test_write_statement_kind_dispatch():
     assert write_statement_kind("SELECT * FROM merged") is None
     assert write_statement_kind("SELECT 'MERGE INTO x'") is None
     assert write_statement_kind("WITH d AS (SELECT 1) SELECT * FROM d"
+                                ) is None
+    assert write_statement_kind(
+        "/* nightly */ MERGE INTO t USING s ...") == "merge"
+    assert write_statement_kind(
+        "/* multi\n   line */\n-- and a line\nOPTIMIZE t") == "optimize"
+    assert write_statement_kind("/* note */ SELECT merge_col FROM t"
                                 ) is None
 
 
@@ -551,6 +636,13 @@ def test_cli_write_statement_flags_and_comments(spark, tmp_path, capsys):
                "t.k = s.k WHEN NOT MATCHED THEN INSERT *"])
     assert rc == 0
     assert json.loads(capsys.readouterr().out)["n_inserted"] == 1
+    rc = main(["sql", "--keyed", f"t={path}:k", "--view",
+               f"stage={stage}", "--text",
+               "/* nightly */ MERGE INTO t USING stage s ON t.k = s.k "
+               "WHEN MATCHED THEN UPDATE SET qty = s.qty + 1"])
+    assert rc == 0
+    assert json.loads(capsys.readouterr().out)["n_matched"] == 1
+    assert _state(spark, path)[6] == (61, "t6")
     rc = main(["sql", "--keyed", f"t={path}:k", "--text",
                "DELETE FROM t WHERE qty >= 60"])
     assert rc == 0
@@ -651,6 +743,11 @@ def test_sql_insert_statement(spark, tmp_path):
     with pytest.raises(MergeSyntaxError, match="merge key"):
         sql_insert(spark, "INSERT INTO t (qty, tag) VALUES (1, 'x')",
                    tables={"t": (path, "k")})
+    before = _state(spark, path)
+    with pytest.raises(MergeSyntaxError, match="OVERWRITE"):
+        sql_write(spark, "INSERT OVERWRITE t VALUES (1, 2, 'x')",
+                  tables={"t": (path, "k")})
+    assert _state(spark, path) == before
 
 
 def test_sql_truncate_statement(spark, tmp_path):
@@ -850,13 +947,11 @@ def test_sql_create_refuses_legacy_parquet_dir(spark, tmp_path):
 
 
 def test_update_delete_adversarial_literals(spark, tmp_path):
-    """Keywords and separators INSIDE string literals: top-level
-    splitting is quote-aware (commas/parens in literals), and a
-    literal that DOES defeat the clause regex (` WHERE ` inside a
-    SET string) fails LOUDLY as a statement error — never a silent
-    mis-update, never a bare JVM traceback."""
+    """Keywords and separators INSIDE string literals (commas,
+    parens, escaped quotes, ` WHERE `) stay inside the literal: Spark's
+    parser splits the statement, never on literal text."""
     from howto_mongo_bulk_update_from_parquet_spark.sinks.sql_merge import (
-        sql_update)
+        sql_delete, sql_update)
 
     path = _mk(spark, tmp_path)          # k=1..4, qty=10k, tag=tk
     # comma inside a literal: one assignment, not two
@@ -868,10 +963,31 @@ def test_update_delete_adversarial_literals(spark, tmp_path):
                       "WHERE k = 2",
                tables={"t": (path, "k")})
     assert _state(spark, path)[2] == (21, "(")
-    # ' WHERE ' inside the literal splits the regex clause — the
-    # mangled halves must refuse loudly as a MergeSyntaxError
-    before = _state(spark, path)
-    with pytest.raises(MergeSyntaxError, match="cannot parse"):
-        sql_update(spark, "UPDATE t SET tag = 'x WHERE y'",
-                   tables={"t": (path, "k")})
-    assert _state(spark, path) == before            # zero trace
+    # double-quoted and backslash-escaped literals are one assignment
+    sql_update(spark, 'UPDATE t SET tag = "a,b" WHERE k = 3',
+               tables={"t": (path, "k")})
+    sql_update(spark, "UPDATE t SET tag = 'a\\'b, c' WHERE k = 4",
+               tables={"t": (path, "k")})
+    st = _state(spark, path)
+    assert st[3] == (30, "a,b") and st[4] == (40, "a'b, c")
+    # ' WHERE ' inside a literal is part of the literal: no WHERE
+    # clause, so every row takes the whole string
+    sql_update(spark, "UPDATE t SET tag = 'x WHERE y'",
+               tables={"t": (path, "k")})
+    assert _state(spark, path) == {1: (10, "x WHERE y"),
+                                   2: (21, "x WHERE y"),
+                                   3: (30, "x WHERE y"),
+                                   4: (40, "x WHERE y")}
+    # a unary operator or parentheses on the tested value belong to
+    # the predicate: -k IN (-1, 3) matches k = 1, not k = 3
+    sql_update(spark, "UPDATE t SET qty = 0 WHERE -k IN (-1, 3)",
+               tables={"t": (path, "k")})
+    st = _state(spark, path)
+    assert st[1] == (0, "x WHERE y") and st[3] == (30, "x WHERE y")
+    sql_update(spark, "UPDATE t SET qty = -1 WHERE (k) IN (2)",
+               tables={"t": (path, "k")})
+    sql_delete(spark, "DELETE FROM t WHERE ~k IN (-5)",
+               tables={"t": (path, "k")})
+    assert _state(spark, path) == {1: (0, "x WHERE y"),
+                                   2: (-1, "x WHERE y"),
+                                   3: (30, "x WHERE y")}
